@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -254,13 +255,15 @@ def calibrate() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
+    # ".../sf0.1" -> 0.1; a tools/scale.py replica ".../spark_graft_sf0.1_x10" -> 1.0
+    m = re.search(r"sf([0-9.]+)(?:_x([0-9]+))?$", sf_dir.rstrip("/"))
+    sf = round(float(m[1]) * int(m[2] or 1), 6) if m else None
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     cal_ref = None
     probe_ref = None
-    # env override exists for gate A/B tests (tools/probe_gate_ab) — the
-    # committed reference stays tools/bench_calibration.json
+    # env override exists for gate A/B runs — the committed reference
+    # stays tools/bench_calibration.json
     cal_path = Path(
         os.environ.get("SPARK_GRAFT_CALIBRATION_REF", str(CALIBRATION_REF))
     )
@@ -329,8 +332,8 @@ def main() -> None:
         # graph, its derived adjacencies, the shingle/quantized-corpus
         # caches, and the trained index constants — so serving medians
         # measure serving and the one-time costs show in lake_build_sec.
-        # Since r13 the builds overlap on a small driver thread pool
-        # (graphdb_td2_spark.lake.warm_serving_artifacts, guide §2.6).
+        # The builds run one after another: overlapping them on a thread
+        # pool measured at parity (see warm_serving_artifacts).
         warm_serving_artifacts(spark, sf_dir)
         lake_build = round(time.time() - t0, 3)
     except Exception as exc:  # never lose the bench to a lake failure

@@ -58,9 +58,8 @@ TFIDF_TOPK = 30
 
 def tfidf_weights(docs: DataFrame, df_cap: int = TFIDF_DF_CAP) -> DataFrame:
     """``(doc_id, w, wt)`` under the df-capped vocabulary — the sparse
-    document vectors. Exposed so the sf1 cap A/B (``tools/tfidf_cap_ab``)
-    and adversarial fixtures can measure join fan-out on the shipped
-    plan rather than a re-implementation."""
+    document vectors. Exposed so adversarial fixtures can measure join
+    fan-out on the shipped plan rather than a re-implementation."""
     n_docs = docs.select(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
@@ -94,12 +93,6 @@ def tfidf_weights(docs: DataFrame, df_cap: int = TFIDF_DF_CAP) -> DataFrame:
         )
     )
     return weights
-
-
-def tfidf_dots(docs: DataFrame, df_cap: int = TFIDF_DF_CAP) -> DataFrame:
-    """``(doc_a, doc_b, dot, n_shared_terms)`` — the term-keyed self-join
-    output whose cardinality the df cap bounds (≤ \\|vocab\\|·cap²/2)."""
-    return _dots_from_weights(tfidf_weights(docs, df_cap=df_cap))
 
 
 def _dots_from_weights(weights: DataFrame) -> DataFrame:

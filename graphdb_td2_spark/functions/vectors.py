@@ -8,7 +8,7 @@ components mapped to exact integers via ``floor(x * 10^6)`` — making dot and
 norm exact 64-bit sums (order-independent); the final cosine is
 ``dot / (sqrt(n1) * sqrt(n2))``, two deterministic IEEE ops. Quantization
 error is ~1e-6 relative — negligible for ranking, and the operator contract
-documents it. A float-native variant is provided for production use.
+documents it.
 
 Scale notes: quantization and per-pair cosine are narrow projections; the
 expensive part is pair *generation*, owned by the callers
@@ -70,23 +70,3 @@ def cosine_similarity_q(a: Column, b: Column) -> Column:
         F.sqrt(sqnorm_q(a).cast("double")) * F.sqrt(sqnorm_q(b).cast("double"))
     )
 
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Float-native cosine (production variant; summation-order sensitive,
-    not oracle-gated)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n1 = F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n2 = F.aggregate(
-        F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return dot / (F.sqrt(n1) * F.sqrt(n2))

@@ -36,12 +36,15 @@ splitting on the shuffled legs.
 
 from __future__ import annotations
 
+import logging
 import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import read_table
+
+log = logging.getLogger("graphdb_td2_spark")
 
 TOP_K = 10  # LIMIT 10 everywhere in the reference (app/main.py:57,77,95,116)
 
@@ -329,7 +332,14 @@ def recommend(
             for r in rows
         ]
     except Exception:
-        items = []  # graceful degradation, app/main.py:125-127
+        # graceful degradation, app/main.py:125-127 — but never silent
+        log.warning(
+            "recs degraded to empty items (product_id=%s, customer_id=%s)",
+            product_id,
+            customer_id,
+            exc_info=True,
+        )
+        items = []
     took_ms = int((time.time() - started) * 1000)
     return {"items": items, "took_ms": took_ms}
 
@@ -343,8 +353,8 @@ def top_cooccurrence_pairs(spark: SparkSession, sf_dir: str, k: int = 20) -> Dat
 
     Skew posture: AQE skew-join splitting — PROVEN to engage on this exact
     join shape by ``tests/test_skew.py`` (hot-key fixture, plan assertion).
-    ``salted_join`` does not apply here (both sides of a self-join are big;
-    it replicates the small side). Note the aggregation keys (product_a,
+    Key salting does not apply here (both sides of a self-join are big;
+    salting replicates one side). Note the aggregation keys (product_a,
     product_b) differ from the join key, which is what makes the split free
     for AQE — an order_id-keyed consumer would veto it (see test docstring).
 

@@ -823,21 +823,6 @@ def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-def maintained_items(
-    spark: SparkSession, state_dir: str, order_buckets: list[int] | None = None
-) -> DataFrame:
-    """The maintained CONTAINS relation ``(order_id, product_id)`` —
-    deduped by construction (the delta's anti-join runs before every
-    append). ``order_buckets`` prunes the read to the hash buckets of the
-    orders a serve actually touches."""
-    version = _latest_version(spark, state_dir)
-    manifest = _read_manifest(spark, state_dir, version)
-    n_buckets = manifest.get("n_buckets") or N_BUCKETS
-    return _mem_state_part(
-        spark, state_dir, version, manifest, "items", order_buckets, n_buckets
-    )
-
-
 def serve_customer_cf(
     spark: SparkSession,
     state_dir: str,

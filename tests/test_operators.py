@@ -163,28 +163,6 @@ def test_asof_join_semantics(spark):
     assert out == {"e1": 100, "e2": 200, "e3": None}
 
 
-def test_salted_join_matches_plain_join(spark):
-    from graphdb_td2_spark.operators.skew import salted_join
-
-    # hot key: 90% of big rows share key 1
-    big = spark.createDataFrame(
-        [(1 if i % 10 else 2, i) for i in range(1000)], "k long, row_id long"
-    )
-    small = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, tag string")
-    got = salted_join(big, small, "k", n_salts=8, big_salt_expr=F.col("row_id"))
-    want = big.join(small, "k")
-    assert got.count() == want.count() == 1000
-    assert (
-        got.groupBy("k", "tag").count().orderBy("k").collect()
-        == want.groupBy("k", "tag").count().orderBy("k").collect()
-    )
-    # deterministic: same salt assignment on re-run
-    again = salted_join(big, small, "k", n_salts=8, big_salt_expr=F.col("row_id"))
-    assert sorted(r.row_id for r in got.collect()) == sorted(
-        r.row_id for r in again.collect()
-    )
-
-
 def test_banded_range_join_matches_naive(spark):
     from graphdb_td2_spark.operators.range_join import banded_range_self_pairs
 

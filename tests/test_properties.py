@@ -12,27 +12,6 @@ from datetime import datetime, timedelta
 from hypothesis import given, settings, strategies as st
 
 from graphdb_td2_spark.dedup.minhash import HASH_P, hash_params
-from graphdb_td2_spark.plans.motif import parse_pattern
-
-node = st.from_regex(r"[a-z][a-z0-9]{0,3}", fullmatch=True)
-rel = st.from_regex(r"[A-Z][A-Z_]{0,8}", fullmatch=True)
-
-
-@given(st.lists(st.tuples(node, rel, st.booleans()), min_size=1, max_size=5))
-def test_motif_parser_roundtrip_chain(steps):
-    """Any rendered chain parses back to the triples that rendered it."""
-    names = [f"n{i}" for i in range(len(steps) + 1)]
-    text = f"({names[0]})"
-    want = []
-    for i, (_, r, fwd) in enumerate(steps):
-        a, b = names[i], names[i + 1]
-        if fwd:
-            text += f"-[:{r}]->({b})"
-            want.append((a, r, b))
-        else:
-            text += f"<-[:{r}]-({b})"
-            want.append((b, r, a))
-    assert parse_pattern(text) == want
 
 
 @given(st.integers(min_value=1, max_value=64))

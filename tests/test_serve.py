@@ -5,6 +5,7 @@ load-effect count → recs), against the stdlib HTTP twin in ``serve.py``."""
 from __future__ import annotations
 
 import json
+import logging
 import urllib.request
 
 import pytest
@@ -70,9 +71,10 @@ def test_unknown_route_is_404(base_url):
     assert e.value.code == 404
 
 
-def test_etl_failure_returns_500_not_hang(spark):
+def test_etl_failure_returns_500_not_hang(spark, caplog):
     """A broken corpus path surfaces as a 500 with ok:false — the checks
-    sequence's --fail curl would exit nonzero instead of hanging."""
+    sequence's --fail curl would exit nonzero instead of hanging. /recs
+    keeps the reference's 200 + empty items, and logs why."""
     server = make_server(spark, "/nonexistent/sf_dir")
     serve_forever_in_thread(server)
     host, port = server.server_address
@@ -82,5 +84,15 @@ def test_etl_failure_returns_500_not_hang(spark):
         assert e.value.code == 500
         body = json.loads(e.value.read())
         assert body["ok"] is False
+
+        with caplog.at_level(logging.WARNING, logger="graphdb_td2_spark"):
+            recs = _get(f"http://{host}:{port}/recs?product_id=1")
+        assert recs["items"] == []
+        degraded = [
+            r for r in caplog.records if r.getMessage().startswith("recs degraded")
+        ]
+        assert len(degraded) == 1
+        assert "product_id=1" in degraded[0].getMessage()
+        assert degraded[0].exc_info is not None
     finally:
         server.shutdown()

@@ -2,9 +2,8 @@
 
 ``top_cooccurrence_pairs`` is the one self-join with real degree-skew
 exposure at 100x (a hyper-popular order key concentrates the shuffle).
-``operators/skew.py:salted_join`` replicates the SMALL side — inapplicable
-to a big-big self-join — so the scale posture there is AQE's skew-join
-splitting.  These tests prove that mechanism actually engages on a hot-key
+Salting the join key would replicate one side — no help for a big-big
+self-join — so the scale posture there is AQE's skew-join splitting.  These tests prove that mechanism actually engages on a hot-key
 fixture with the exact join shape (equi self-join on the order key with an
 inequality residual), rather than trusting the conf flag.
 

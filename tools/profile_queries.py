@@ -8,7 +8,8 @@ Usage: python tools/profile_queries.py [--sf SF_DIR] [--runs N] \
 ``--no-warm`` skips ``warm_serving_artifacts`` so the FIRST run of each
 query shows its cold cost (the r14 cold/warm accounting table); the lake
 build itself always runs (the parquet lake is a cross-process manifest,
-not a session artifact).
+not a session artifact). A query that raises is recorded as
+``{"error": ..., "samples": [...]}`` and the remaining queries still run.
 """
 
 from __future__ import annotations
@@ -35,6 +36,12 @@ def main() -> int:
     ap.add_argument("--no-warm", action="store_true")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
+    if args.runs < 1:
+        ap.error("--runs must be at least 1")
+    registry = entry_mod.queries()
+    unknown = sorted(set(args.queries) - set(registry))
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
 
     spark = get_spark("profile-queries")
     spark.range(1).count()
@@ -48,17 +55,25 @@ def main() -> int:
         warm_serving_artifacts(spark, args.sf)
     print(f"# lake+warm: {time.time() - t0:.3f}s", file=sys.stderr)
 
-    registry = entry_mod.queries()
     out: dict[str, dict] = {}
     for name in args.queries:
         fn = registry[name]
         samples: list[float] = []
-        for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
-            t0 = time.time()
-            n = len(fn(spark, args.sf).collect())
-            samples.append(time.time() - t0)
-        spark.sparkContext.setJobDescription(None)
+        try:
+            for i in range(args.runs):
+                spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
+                t0 = time.time()
+                n = len(fn(spark, args.sf).collect())
+                samples.append(time.time() - t0)
+        except Exception as exc:  # one broken query must not lose the rest
+            out[name] = {
+                "error": f"{type(exc).__name__}: {str(exc)[:200]}",
+                "samples": [round(s, 3) for s in samples],
+            }
+            print(f"# {name}: ERROR {out[name]['error']}", file=sys.stderr)
+            continue
+        finally:
+            spark.sparkContext.setJobDescription(None)
         out[name] = {
             "median": round(statistics.median(samples), 3),
             "samples": [round(s, 3) for s in samples],
