@@ -1,15 +1,16 @@
 """Session-scoped cache hygiene shared by every lake-artifact memo
 (``graph/queries.py`` graph/und frames, ``graph/walks.py`` co-purchase
 adjacency, ``graph/lpa.py`` label frames, ``similarity/ann.py`` /
-``similarity/pq.py`` trained-index rows).
+``similarity/pq.py`` trained-index rows, ``recs/queries.py`` /recs
+views).
 
 The memos key by ``applicationId`` so a new session never sees another
 session's entries — but entries for STOPPED sessions used to live until
 process exit, pinning dead DataFrame references and driver-side row
 lists in a long-lived server that cycles sessions (ADVICE r12). Every
-cache now prunes stopped-session entries on access via the pattern
-``similarity/pq.py`` introduced in r11, hoisted here so the seven call
-sites share one definition.
+cache now prunes stopped-session entries on access (the /recs views on
+a cache miss) via the pattern ``similarity/pq.py`` introduced in r11,
+hoisted here so every call site shares one definition.
 """
 
 from __future__ import annotations

@@ -1,47 +1,70 @@
-"""The four ``GET /recs`` strategies (``app/main.py:49-123``) as Catalyst
-join chains, plus the driver-side try-then-fallback control flow (SURVEY.md
-§3.1 step 4).
+"""The four ``GET /recs`` strategies (``app/main.py:49-123``) as lookups
+against two session-persisted views, plus the sequential
+try-then-fallback control flow (SURVEY.md §3.1 step 4).
 
-Core functions operate on normalized relation views so the same logic runs
-over the driver corpus (lineitem/orders/part) and the reference-shape seed
+Inputs are normalized relation views so the same logic runs over the
+TPC-H-shaped corpus (lineitem/orders/part) and the reference-shape seed
 fixture (order_items/orders/products):
 
 - ``items(order_id, product_id)``      — raw CONTAINS candidates (dups OK)
 - ``placed(order_id, customer_id)``    — PLACED edges
 - ``products(product_id, category_id)``— product→category dimension
 
+Every request is a lookup against two views built from them:
+
+- ``pairs(product_id, other, n)`` — symmetric basket co-occurrence:
+  ``n`` orders contain both ``product_id`` and ``other`` (``other ≠
+  product_id``)
+- ``bought(customer_id, product_id, m)`` — ``m`` of the customer's
+  orders contain the product
+
 Cypher semantics reproduced exactly (verified against ``app/main.py``):
 
 - CONTAINS is MERGE-deduped per (order, product) (``app/etl.py:243``), so
-  co-occurrence counts *distinct pairs*, not raw line items — dedup happens
-  here AFTER seed-driven narrowing (same result, no full-table shuffle).
+  both views count distinct orders, not raw line items.
+- The product query (``app/main.py:51-60``) scores ``other`` by
+  ``n(seed, other)``: one filter on ``pairs``.
 - The customer query (``app/main.py:90-92``) is two MATCH clauses; Cypher
   relationship-uniqueness applies per clause, so the only implicit
   constraint is ``other ≠ p`` inside the second MATCH — path counts
   accumulate across (o1, p, o2) triples (SURVEY §2 D1: do NOT dedup before
-  counting).
-- ``WHERE NOT (c)-[:PLACED]->(:Order)-[:CONTAINS]->(other)`` is a left-anti
-  join against the customer's purchased set (C5).
+  counting). The count factorizes: each purchased ``p`` contributes
+  ``m(p)`` first hops (o1, p) times ``n(p, other)`` second hops (o2,
+  other), so ``score(other) = Σ_p m(p)·n(p, other)`` — the same
+  factorization ``streaming/ivm.serve_customer_cf`` serves from maintained
+  state.
+- ``WHERE NOT (c)-[:PLACED]->(:Order)-[:CONTAINS]->(other)`` excludes the
+  customer's ``bought`` products (C5).
 - Every LIMIT carries a deterministic total order (score DESC, product_id
   ASC) — a documented tightening of Neo4j's unspecified tie order
   (SURVEY §7 risk register).
 
-Scale notes: all seed-derived sides (orders of one product, one customer's
-orders / purchased set) are tiny → explicitly broadcast; the only big-big
-joins are items⋈items restricted by those broadcasts. Seed equality filters
-push down to the parquet scan. Top-k compiles to TakeOrderedAndProject (no
-full sort). Degree skew (a hyper-popular product) is absorbed by AQE skew
-splitting on the shuffled legs.
+Scale notes: ``_cached_view`` persists ``pairs`` and ``bought`` once per
+(application, sf_dir), so the basket self-join runs once per session, not
+once per request. On a warmed session a product request is ONE Spark job
+(the seed predicate pushed into ``pairs``' InMemoryTableScan, then
+TakeOrderedAndProject) and a customer request is TWO: collect the
+customer's ``bought`` rows (one per purchased product — serving metadata),
+then one aggregate over ``pairs``. ``pairs`` is hash-partitioned by
+``other`` before the persist, so that aggregate's ``groupBy(other)`` needs
+no exchange. Its size is Σ over orders of basket size², bounded by basket
+sizes rather than |products|². At 100 TB ``pairs`` is the item-item table
+a deployment keeps as a bucketed lake table (bucketed by ``other``, kept
+current the way ``streaming/ivm.py`` maintains the same counts); here it
+lives in session memory.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 import time
+from itertools import chain
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import evict_stopped
 from ..io import read_table
 
 log = logging.getLogger("graphdb_td2_spark")
@@ -54,32 +77,156 @@ DEFAULT_PART = 1
 DEFAULT_CUSTOMER = 1
 
 
-# --- core logic over normalized views ----------------------------------------
+# --- the two views ------------------------------------------------------------
 
 
 def _dedup_pairs(df: DataFrame) -> DataFrame:
     return df.select("order_id", "product_id").distinct()
 
 
-def product_cooccurrence_core(items: DataFrame, seed_product) -> DataFrame:
-    """C1+B3+D1+F1 (app/main.py:51-60): basket co-occurrence for one product.
-
-    ``(p {id:$pid})<-[:CONTAINS]-(o)-[:CONTAINS]->(other) WHERE other<>p
-    RETURN other.id, count(*) AS score ORDER BY score DESC LIMIT 10``
-    """
-    seed_orders = (
-        items.filter(F.col("product_id") == seed_product)
-        .select("order_id")
-        .distinct()
-    )
-    cand = _dedup_pairs(items.join(F.broadcast(seed_orders), "order_id"))
+def pairs_view(items: DataFrame) -> DataFrame:
+    """``pairs(product_id, other, n)``: for every ordered product pair
+    sharing a basket, the number of distinct orders holding both. Both
+    directions are present, so a lookup on either column is one filter.
+    Hash-partitioned by ``other``, one partition per core, so a persisted
+    copy serves ``groupBy(other)`` without an exchange and a lookup runs
+    as one wave of tasks."""
+    deduped = _dedup_pairs(items)
+    a, b = deduped.alias("a"), deduped.alias("b")
+    width = items.sparkSession.sparkContext.defaultParallelism
     return (
-        cand.filter(F.col("product_id") != seed_product)
-        .groupBy("product_id")
-        .agg(F.count(F.lit(1)).cast("double").alias("score"))
-        .select("product_id", "score", F.lit("co-occurrence").alias("reason"))
+        a.join(
+            b,
+            (F.col("a.order_id") == F.col("b.order_id"))
+            & (F.col("a.product_id") != F.col("b.product_id")),
+        )
+        .groupBy(
+            F.col("a.product_id").alias("product_id"),
+            F.col("b.product_id").alias("other"),
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+        .repartition(width, "other")
+    )
+
+
+def bought_view(items: DataFrame, placed: DataFrame) -> DataFrame:
+    """``bought(customer_id, product_id, m)``: how many of the customer's
+    distinct orders contain each product — the ``m(p)`` of the customer
+    factorization, and (its keys) the customer's purchased set."""
+    orders = placed.select("order_id", "customer_id").distinct()
+    width = items.sparkSession.sparkContext.defaultParallelism
+    return (
+        _dedup_pairs(items)
+        .join(orders, "order_id")
+        .groupBy("customer_id", "product_id")
+        .agg(F.count(F.lit(1)).alias("m"))
+        .repartition(width, "customer_id")
+    )
+
+
+# --- lookups against the views ------------------------------------------------
+
+
+def _ranked(scored: DataFrame) -> DataFrame:
+    """``(product_id, score)`` → the co-occurrence answer: double score,
+    reason, deterministic top-k."""
+    return (
+        scored.select(
+            "product_id",
+            F.col("score").cast("double").alias("score"),
+            F.lit("co-occurrence").alias("reason"),
+        )
         .orderBy(F.desc("score"), F.asc("product_id"))
         .limit(TOP_K)
+    )
+
+
+def _sql_literal(value) -> str:
+    """Spark SQL text for an id collected from a view: BIGINT in the
+    corpus, a string in the reference fixture."""
+    if isinstance(value, int):
+        return f"{value}L"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_list(values) -> str:
+    return ", ".join(_sql_literal(v) for v in values)
+
+
+def product_cooccurrence_lookup(pairs: DataFrame, seed_product) -> DataFrame:
+    """C1+B3+D1+F1 (app/main.py:51-60) against ``pairs``: the seed's
+    partners ranked by shared-order count."""
+    return _ranked(
+        pairs.filter(F.col("product_id") == seed_product).select(
+            F.col("other").alias("product_id"), F.col("n").alias("score")
+        )
+    )
+
+
+def purchased_lookup(bought: DataFrame, seed_customer) -> DataFrame:
+    """C3 (app/main.py:90): the products the customer has purchased."""
+    return bought.filter(F.col("customer_id") == seed_customer).select("product_id")
+
+
+def customer_cooccurrence_lookup(
+    pairs: DataFrame, bought: DataFrame, seed_customer
+) -> DataFrame:
+    """C3+C4+C5+D1+F1 (app/main.py:88-98) against the views:
+    ``score(other) = Σ_p m(p)·n(p, other)`` over the customer's purchased
+    ``p``, with purchased products excluded.
+
+    The customer's ``bought`` rows are collected first (one Spark job, one
+    row per purchased product) and inlined as literals, so the aggregate
+    over ``pairs`` is a second job with no join and no exchange. Null
+    product ids match nothing on either path, so they are skipped."""
+    mine = {
+        r["product_id"]: r["m"]
+        for r in bought.filter(
+            (F.col("customer_id") == seed_customer) & F.col("product_id").isNotNull()
+        )
+        .select("product_id", "m")
+        .collect()
+    }
+    if not mine:  # unknown customer, or no purchases: no candidates
+        return _ranked(
+            pairs.limit(0).select(
+                F.col("other").alias("product_id"), F.col("n").alias("score")
+            )
+        )
+    ids = _sql_list(mine)
+    m = F.expr(f"map({_sql_list(chain.from_iterable(mine.items()))})")
+    return _ranked(
+        pairs.filter(F.expr(f"product_id IN ({ids}) AND other NOT IN ({ids})"))
+        .groupBy("other")
+        .agg(F.sum(F.col("n") * m[F.col("product_id")]).alias("score"))
+        .select(F.col("other").alias("product_id"), "score")
+    )
+
+
+def customer_brand_fallback_lookup(
+    bought: DataFrame, products: DataFrame, seed_customer
+) -> DataFrame:
+    """C6+C5+D2+F2 (app/main.py:110-119): categories of the customer's
+    purchases → all products in them → minus purchased → DISTINCT, LIMIT 10
+    (deterministically lowest product ids)."""
+    purchased = purchased_lookup(bought, seed_customer)
+    cats = (
+        products.join(F.broadcast(purchased), "product_id")
+        .select("category_id")
+        .distinct()
+    )
+    return (
+        products.join(F.broadcast(cats), "category_id")
+        .join(F.broadcast(purchased), "product_id", "left_anti")
+        .select("product_id")
+        .distinct()
+        .orderBy(F.asc("product_id"))
+        .limit(TOP_K)
+        .select(
+            "product_id",
+            F.lit(1.0).alias("score"),
+            F.lit("same-category").alias("reason"),
+        )
     )
 
 
@@ -104,128 +251,91 @@ def product_same_brand_core(products: DataFrame, seed_product) -> DataFrame:
     )
 
 
+# --- the same strategies over raw relations -----------------------------------
+#
+# Build the views from ``items``/``placed``, then look up: one code path for
+# the fixtures, the IVM cross-checks and the served corpus, which passes in
+# its persisted views instead.
+
+
+def product_cooccurrence_core(items: DataFrame, seed_product) -> DataFrame:
+    """``(p {id:$pid})<-[:CONTAINS]-(o)-[:CONTAINS]->(other) WHERE other<>p
+    RETURN other.id, count(*) AS score ORDER BY score DESC LIMIT 10``"""
+    return product_cooccurrence_lookup(pairs_view(items), seed_product)
+
+
 def purchased_products_core(items: DataFrame, placed: DataFrame, seed_customer) -> DataFrame:
-    """C3 (app/main.py:90): distinct products the customer has purchased."""
-    my_orders = (
-        placed.filter(F.col("customer_id") == seed_customer)
-        .select("order_id")
-        .distinct()
-    )
-    return (
-        _dedup_pairs(items.join(F.broadcast(my_orders), "order_id"))
-        .select("product_id")
-        .distinct()
-    )
+    return purchased_lookup(bought_view(items, placed), seed_customer)
 
 
 def customer_cooccurrence_core(
     items: DataFrame, placed: DataFrame, seed_customer
 ) -> DataFrame:
-    """C3+C4+C5+D1+F1 (app/main.py:88-98): products co-occurring with the
-    customer's purchases, excluding already-purchased, path-count scored.
-
-    Path = (o1, p, o2, other) with placed(c,o1), contains(o1,p),
-    contains(o2,p), contains(o2,other), other≠p, other ∉ purchased(c);
-    score(other) = number of such paths (no dedup before counting — D1).
-    """
-    my_orders = (
-        placed.filter(F.col("customer_id") == seed_customer)
-        .select("order_id")
-        .distinct()
-    )
-    # c1: (o1, p) — the customer's purchase pairs (MERGE-deduped CONTAINS).
-    c1 = _dedup_pairs(items.join(F.broadcast(my_orders), "order_id"))
-    purchased = c1.select("product_id").distinct()
-    # c2: (o2, p) — all orders containing a purchased product.
-    c2 = _dedup_pairs(items.join(F.broadcast(purchased), "product_id"))
-    # c3: (o2, other) — full contents of those orders. The o2 set can be
-    # large for heavy customers: join it un-hinted and let AQE choose.
-    o2 = c2.select("order_id").distinct()
-    c3 = _dedup_pairs(items.join(o2, "order_id"))
-    paths = (
-        c1.alias("a")
-        .join(c2.alias("b"), F.col("a.product_id") == F.col("b.product_id"))
-        .join(c3.alias("c"), F.col("b.order_id") == F.col("c.order_id"))
-        # r3 ≠ r4 within MATCH 2 → other ≠ p (per-clause rel-uniqueness).
-        .filter(F.col("c.product_id") != F.col("a.product_id"))
-        .select(F.col("c.product_id").alias("product_id"))
-    )
-    return (
-        paths.join(F.broadcast(purchased), "product_id", "left_anti")  # C5
-        .groupBy("product_id")
-        .agg(F.count(F.lit(1)).cast("double").alias("score"))
-        .select("product_id", "score", F.lit("co-occurrence").alias("reason"))
-        .orderBy(F.desc("score"), F.asc("product_id"))
-        .limit(TOP_K)
+    """Products co-occurring with the customer's purchases, excluding
+    already-purchased, path-count scored."""
+    return customer_cooccurrence_lookup(
+        pairs_view(items), bought_view(items, placed), seed_customer
     )
 
 
 def customer_brand_fallback_core(
     items: DataFrame, placed: DataFrame, products: DataFrame, seed_customer
 ) -> DataFrame:
-    """C6+C5+D2+F2 (app/main.py:110-119): categories of the customer's
-    purchases → all products in them → minus purchased → DISTINCT, LIMIT 10
-    (deterministically lowest product ids)."""
-    purchased = purchased_products_core(items, placed, seed_customer)
-    cats = (
-        products.join(F.broadcast(purchased), "product_id")
-        .select("category_id")
-        .distinct()
-    )
-    return (
-        products.join(F.broadcast(cats), "category_id")
-        .join(F.broadcast(purchased), "product_id", "left_anti")
-        .select("product_id")
-        .distinct()
-        .orderBy(F.asc("product_id"))
-        .limit(TOP_K)
-        .select(
-            "product_id",
-            F.lit(1.0).alias("score"),
-            F.lit("same-category").alias("reason"),
-        )
+    return customer_brand_fallback_lookup(
+        bought_view(items, placed), products, seed_customer
     )
 
 
 # --- corpus views (FIXTURES.md mapping) ---------------------------------------
 #
-# Session-scoped materialized adjacency views: every /recs strategy starts
-# from the same 2-column projections, so they persist once per (application,
-# sf_dir) — the in-session analogue of the bucketed adjacency tables a
-# production deployment would maintain on the lake (see sources/sinks.py).
+# Session-scoped materialized views, persisted once per (application, sf_dir)
+# — the in-session analogue of the bucketed tables a production deployment
+# would maintain on the lake (see sources/sinks.py).
 
 _VIEW_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_VIEW_LOCK = threading.Lock()
 
 
 def _cached_view(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    """The persisted view ``name`` of this session's ``sf_dir``, built and
+    materialized on first use. Server threads race here on a fresh
+    session: the build runs under a lock, so exactly one copy is
+    persisted, and it is fully materialized before any thread reads it."""
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
     df = _VIEW_CACHE.get(key)
     if df is None:
-        df = build().persist()
-        _VIEW_CACHE[key] = df
+        with _VIEW_LOCK:
+            evict_stopped(_VIEW_CACHE, lambda v: v.sparkSession)
+            df = _VIEW_CACHE.get(key)
+            if df is None:
+                df = build().persist()
+                try:
+                    df.count()
+                except Exception:
+                    df.unpersist()
+                    raise
+                _VIEW_CACHE[key] = df
     return df
 
 
-def _items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached_view(
-        spark,
-        sf_dir,
-        "items",
-        lambda: read_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"]).select(
-            F.col("l_orderkey").alias("order_id"), F.col("l_partkey").alias("product_id")
-        ),
+def _read_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return read_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"]).select(
+        F.col("l_orderkey").alias("order_id"), F.col("l_partkey").alias("product_id")
     )
+
+
+def _read_placed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return read_table(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"]).select(
+        F.col("o_orderkey").alias("order_id"), F.col("o_custkey").alias("customer_id")
+    )
+
+
+def _items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cached_view(spark, sf_dir, "items", lambda: _read_items(spark, sf_dir))
 
 
 def _placed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached_view(
-        spark,
-        sf_dir,
-        "placed",
-        lambda: read_table(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"]).select(
-            F.col("o_orderkey").alias("order_id"), F.col("o_custkey").alias("customer_id")
-        ),
-    )
+    return _cached_view(spark, sf_dir, "placed", lambda: _read_placed(spark, sf_dir))
 
 
 def _products(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,10 +349,25 @@ def _products(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cached_view(
+        spark, sf_dir, "pairs", lambda: pairs_view(_read_items(spark, sf_dir))
+    )
+
+
+def _bought(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cached_view(
+        spark,
+        sf_dir,
+        "bought",
+        lambda: bought_view(_read_items(spark, sf_dir), _read_placed(spark, sf_dir)),
+    )
+
+
 def product_cooccurrence(
     spark: SparkSession, sf_dir: str, part_key: int = DEFAULT_PART
 ) -> DataFrame:
-    return product_cooccurrence_core(_items(spark, sf_dir), part_key)
+    return product_cooccurrence_lookup(_pairs(spark, sf_dir), part_key)
 
 
 def product_same_brand(
@@ -254,28 +379,23 @@ def product_same_brand(
 def customer_cooccurrence(
     spark: SparkSession, sf_dir: str, cust_key: int = DEFAULT_CUSTOMER
 ) -> DataFrame:
-    return customer_cooccurrence_core(
-        _items(spark, sf_dir), _placed(spark, sf_dir), cust_key
+    return customer_cooccurrence_lookup(
+        _pairs(spark, sf_dir), _bought(spark, sf_dir), cust_key
     )
 
 
 def customer_brand_fallback(
     spark: SparkSession, sf_dir: str, cust_key: int = DEFAULT_CUSTOMER
 ) -> DataFrame:
-    return customer_brand_fallback_core(
-        _items(spark, sf_dir),
-        _placed(spark, sf_dir),
-        _products(spark, sf_dir),
-        cust_key,
+    return customer_brand_fallback_lookup(
+        _bought(spark, sf_dir), _products(spark, sf_dir), cust_key
     )
 
 
 def purchased_products(
     spark: SparkSession, sf_dir: str, cust_key: int = DEFAULT_CUSTOMER
 ) -> DataFrame:
-    return purchased_products_core(
-        _items(spark, sf_dir), _placed(spark, sf_dir), cust_key
-    ).orderBy("product_id")
+    return purchased_lookup(_bought(spark, sf_dir), cust_key).orderBy("product_id")
 
 
 # --- the API surface (app/main.py:23-135) ------------------------------------
@@ -296,12 +416,20 @@ def recommend(
     catch-all → empty items (app/main.py:125-127), ``took_ms`` wall-clock
     (app/main.py:35,134).
 
+    Every step is a lookup against this session's persisted ``pairs`` /
+    ``bought`` views (module docstring): a product answer filters
+    ``pairs`` on the seed (one Spark job once warm); a customer answer
+    collects the customer's ``bought`` rows and sums ``m(p)·n(p, other)``
+    over ``pairs`` (two jobs). The first request of each kind builds the
+    views it needs. The brand fallbacks read ``products`` and, for a
+    customer, the purchased set from ``bought``.
+
     ``source="ivm"`` answers the product co-occurrence step from the
-    INCREMENTALLY MAINTAINED view (streaming/ivm.py) instead of the lake
-    recompute — the serving-reads-maintained-state architecture the
-    reference's roadmap implies ("make the ETL run automatically",
-    README:5). Fallback steps are source-independent (they read dimension
-    tables, not the pair view).
+    INCREMENTALLY MAINTAINED view (streaming/ivm.py) instead of ``pairs``
+    — the serving-reads-maintained-state architecture the reference's
+    roadmap implies ("make the ETL run automatically", README:5). Fallback
+    steps are source-independent (they read dimension tables, not the
+    pair view).
     """
     if source not in ("batch", "ivm"):
         raise ValueError(f"recommend source must be 'batch' or 'ivm', got {source!r}")

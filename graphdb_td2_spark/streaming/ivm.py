@@ -831,18 +831,18 @@ def serve_customer_cf(
     k: int = 10,
 ) -> DataFrame:
     """The C4 serving query (``GET /recs?customer_id=``) answered from the
-    MAINTAINED state instead of the 4-hop batch recompute.
+    MAINTAINED state instead of the session-persisted views.
 
-    The batch path's path-count factorizes over the maintained relations:
+    The same factorization the batch path serves
+    (``recs/queries.py:customer_cooccurrence_lookup``):
     score(other) = Σ_p m_c(p)·w(p, other) with m_c(p) = number of the
     customer's orders containing p (the maintained ITEMS part joined to
     the customer's orders — bucket-pruned: only the hash buckets of those
-    order ids are read) and w(p, other) = orders containing both p and
-    other — exactly the maintained co-occurrence count. The anti-join
-    against purchased and the (score DESC, id ASC) top-k mirror
-    ``recs/queries.py:customer_cooccurrence_core`` term for term, so the
-    driver can hash-compare this against ``recs_customer_cf``'s oracle SQL
-    verbatim.
+    order ids are read; the batch path's ``bought`` view) and w(p, other)
+    = orders containing both p and other — the maintained co-occurrence
+    count, the batch path's ``pairs`` view. The purchased-set exclusion and
+    the (score DESC, id ASC) top-k match it term for term, so
+    ``recs_customer_cf``'s oracle SQL checks this answer verbatim.
 
     Scale: the customer's order list is tiny (broadcast); the items read
     touches O(1) state buckets; the counts scan is the same maintained
@@ -951,10 +951,12 @@ def serve_product_cooccurrence(
     """The C1 serving query (``GET /recs?product_id=``) answered from the
     MAINTAINED view instead of a recompute: partners of ``product_id``
     ranked by shared-order count. Column names, score type, reason string,
-    and tiebreak all match the batch path
-    (``recs/queries.py:product_cooccurrence_core``) exactly — IVM serving
-    must be indistinguishable from a recompute, which the shared oracle
-    asserts.
+    and tiebreak all match the batch lookup on the ``pairs`` view
+    (``recs/queries.py:product_cooccurrence_lookup``) exactly — IVM
+    serving must be indistinguishable from a recompute, which the shared
+    oracle asserts. The maintained counts store each pair once
+    (``product_a < product_b``), so the seed is matched on either side;
+    ``pairs`` stores both directions.
 
     Scale: the maintained counts are bucket-pruned parquet (or the warm
     cache); the seed filter reduces to the pairs touching one product
@@ -1000,10 +1002,10 @@ def serve_brand_fallback(
     """The C6 serving query (brand fallback) answered from MAINTAINED
     state: the customer's purchased set comes from the maintained ITEMS
     part (bucket-pruned to the customer's order buckets, exactly the
-    ``serve_customer_cf`` read path) instead of a lineitem recompute; the
-    category expansion / anti-join / deterministic lowest-id LIMIT are
-    the static-dimension chain of
-    ``recs/queries.py:customer_brand_fallback_core`` verbatim. With this,
+    ``serve_customer_cf`` read path) instead of the batch path's
+    ``bought`` view; the category expansion / anti-join / deterministic
+    lowest-id LIMIT are the static-dimension chain of
+    ``recs/queries.py:customer_brand_fallback_lookup`` verbatim. With this,
     every state-dependent /recs strategy the reference serves from its
     built graph (app/main.py:51-123) has a maintained-state twin."""
     version = _latest_version(spark, state_dir)
